@@ -849,7 +849,7 @@ class Engine:
                         "engine-governed table")
                 from gpdb_spark.operators.external import \
                     read_external_csv
-                tgt_schema = gp.read(self.spark).schema
+                tgt_schema = gp.schema(self.spark)
                 read_schema = tgt_schema
                 if collist:
                     # COPY tbl (a, b) FROM ...: the file carries ONLY
@@ -896,8 +896,7 @@ class Engine:
                 # COPY enforces unique indexes like INSERT
                 # (nbtinsert.c — ADVICE r10 #5)
                 self._enforce_unique(nm, good)
-                n = good.count()
-                gp.insert_into(good)
+                n = gp.insert_into(good)
                 self._refresh(nm)
                 return self.spark.createDataFrame(
                     [(f"COPY {n}",)], "status string")
@@ -1988,9 +1987,12 @@ class Engine:
             i += 1
         return " ".join(out)
 
-    def insert_into(self, name: str, df: DataFrame) -> None:
-        self._tables[name].insert_into(df)
+    def insert_into(self, name: str, df: DataFrame) -> int:
+        """INSERT ``df`` into a governed table; returns the rows inserted
+        (after BEFORE INSERT row triggers, like PG's command tag)."""
+        n = self._tables[name].insert_into(df)
         self._refresh(name)
+        return n
 
     def _inherit_children(self, name: str) -> list[str]:
         """Transitive inheritance children of ``name`` (tablecmds.c
@@ -2490,7 +2492,8 @@ class Engine:
         nodeModifyTable.c). Expression fragments (SET values, WHERE)
         run through the same dialect translator as queries, then the
         storage layer's copy-on-write rewrite executes the change.
-        Returns affected-row count (INSERT: rows written)."""
+        Returns affected-row count (INSERT: rows written, after BEFORE
+        INSERT row triggers)."""
         import re as _re
 
         from pyspark.sql import functions as Fn
@@ -2501,7 +2504,7 @@ class Engine:
         m = _re.match(r"(?is)^\s*insert\s+into\s+(\w+)\s*(\([^)]*\))?\s*(.*)$", s)
         if m:
             name, cols, rest = _fold_ident(m.group(1)), m.group(2), m.group(3)
-            target = self._tables[name].read(self.spark)
+            target = self._tables[name].schema(self.spark)
             if _re.match(r"(?is)^values\b", rest):
                 # unconstrained-numeric (text-stored) target columns:
                 # Spark's VALUES list unifies literal types across rows
@@ -2514,14 +2517,14 @@ class Engine:
                     c for (t, c), (k2, _n2) in getattr(
                         self, "_typmod_cols", {}).items()
                     if t == name and k2 == "numeric"}
-                dcols = {f.name.lower() for f in target.schema.fields
+                dcols = {f.name.lower() for f in target.fields
                          if f.dataType.simpleString() == "date"}
                 if ntext or dcols:
                     if cols:
                         nm0 = [_fold_ident(c.strip())
                                for c in cols[1:-1].split(",")]
                     else:
-                        nm0 = [f.name for f in target.schema.fields]
+                        nm0 = [f.name for f in target.fields]
                     pos = {xi for xi, c in enumerate(nm0)
                            if c.lower() in ntext}
                     dpos = {xi for xi, c in enumerate(nm0)
@@ -2541,7 +2544,7 @@ class Engine:
                 # target columns (trailing columns NULL-fill below)
                 names = [
                     f.name
-                    for f in target.schema.fields[: len(df.columns)]
+                    for f in target.fields[: len(df.columns)]
                 ]
             df = df.toDF(*names)
             # positional INSERT fills missing trailing columns with NULL
@@ -2549,7 +2552,7 @@ class Engine:
             # an exact-case check would withColumn-REPLACE a same-named
             # column with NULL and silently lose the inserted values)
             have = {c.lower() for c in df.columns}
-            for f in target.schema.fields:
+            for f in target.fields:
                 if f.name.lower() not in have:
                     df = df.withColumn(
                         f.name, Fn.lit(None).cast(f.dataType)
@@ -2577,15 +2580,13 @@ class Engine:
                     ).cast(f.dataType).alias(f.name)
                 return Fn.col(f.name).cast(f.dataType).alias(f.name)
 
-            df = df.select(*[_align(f) for f in target.schema.fields])
+            df = df.select(*[_align(f) for f in target.fields])
             # geo-typed columns store the canonical text image: run the
             # input function (validation: bad input raises PG's message
             # BEFORE anything is written) + output function per value
             df = self._canon_write(name, df)
             self._enforce_unique(name, df)
-            n = df.count()
-            self.insert_into(name, df)
-            return n
+            return self.insert_into(name, df)
 
         m = _re.match(
             r"(?is)^\s*update\s+(only\s+)?(\w+)\s+set\s+(.*)$", s)

@@ -23,6 +23,27 @@ Spark-first mapping implemented here:
 - UPDATE/DELETE on immutable parquet -> copy-on-write rewrite (the
   batch-engine equivalent of nodeModifyTable.c's DML; SplitUpdate's
   "delete+insert with redistribution" is exactly rewrite+repartition).
+- pg_attribute -> a known read schema per table. Like the reference's
+  executor, which takes a relation's tuple descriptor from the catalog
+  and never re-derives it from the data files, every scan of a table's
+  own files goes through ``GpTable._scan`` with that schema supplied.
+  Without it, each ``spark.read.parquet`` call runs a footer-reading
+  schema-inference Spark job. The rule:
+  * a write of a non-partitioned table records the written frame's
+    schema made nullable, which is exactly what footer inference returns
+    for those files (Spark stores its schema in every footer and reads
+    all file columns back as nullable);
+  * an append keeps the known schema only when the batch's schema
+    agrees with it;
+  * every write of a partitioned table, and every partition DDL
+    (``exchange_partition``, ``split_partition``, ``drop_partition``),
+    leaves the table cold: partition column types are re-inferred from
+    the directory names, so the set of values decides them;
+  * a cold table (for example a ``GpTable`` built over an existing
+    directory) infers the schema on its next scan, once.
+  Outside the partition DDL, ``_write`` and ``_swap_in`` (used by
+  ``_rewrite``, ``truncate``, ``cluster_by`` and ``vacuum``) are the
+  only places that write table files, and both update the known schema.
 """
 
 from __future__ import annotations
@@ -35,6 +56,22 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable —
+    the schema a file source reads back (Spark's ``asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 @dataclass
@@ -81,6 +118,9 @@ class GpTable:
     num_buckets: int = 32
     sort_by: tuple[str, ...] = ()
     row_triggers: list = field(default_factory=list)
+    # known read schema of the table's files; None = cold (see module doc)
+    _schema: StructType | None = field(
+        default=None, init=False, repr=False, compare=False)
 
     def add_row_trigger(self, trigger: "RowTrigger") -> None:
         """CREATE TRIGGER ... BEFORE event FOR EACH ROW."""
@@ -151,6 +191,14 @@ class GpTable:
             return df.repartition(self.num_buckets, *self.policy.distkey)
         return df.repartition(self.num_buckets)
 
+    def _stored(self, schema: StructType, replaced: bool) -> None:
+        """Keep the known read schema in step with files just written
+        (``replaced``: they are now the whole table; else appended)."""
+        new = None if self.partition_by else _nullable(schema)
+        if not replaced and new != self._schema:
+            new = None
+        self._schema = new
+
     def _write(self, df: DataFrame, mode: str) -> None:
         self._last_schema = df.schema  # read() fallback for empty tables
         placed = self._placed(df)
@@ -164,6 +212,8 @@ class GpTable:
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(self.path)
+        # "ignore" may write nothing: treat it like an append
+        self._stored(df.schema, replaced=mode not in ("append", "ignore"))
 
     # -- read path -----------------------------------------------------------
 
@@ -175,9 +225,29 @@ class GpTable:
                 return True
         return False
 
+    def _scan(self, spark: SparkSession) -> DataFrame:
+        """The one scan of this table's files: with the known schema
+        supplied (no inference job), or inferring it once when cold."""
+        if self._schema is not None:
+            return spark.read.schema(self._schema).parquet(self.path)
+        df = spark.read.parquet(self.path)
+        self._schema = df.schema
+        return df
+
+    def schema(self, spark: SparkSession) -> StructType:
+        """The table's read schema, without building a scan when known."""
+        if self._schema is not None:
+            return self._schema
+        return self.read(spark).schema
+
     def read(self, spark: SparkSession) -> DataFrame:
         """Scan; REPLICATED tables come back broadcast-hinted so every join
         against them is a broadcast join (no fact-side shuffle).
+
+        The scan supplies the table's known schema, so it runs no
+        schema-inference job; writes keep that schema current and
+        partitioned writes or partition DDL make the table infer it again
+        on its next scan (module docstring).
 
         A truncated PARTITIONED table has no files at all (an empty
         partitionBy write emits no schema-bearing part file — verified
@@ -187,7 +257,7 @@ class GpTable:
         data files. A corrupt footer, permission error, or mid-rewrite
         race must raise, not masquerade as a truncated table."""
         try:
-            df = spark.read.parquet(self.path)
+            df = self._scan(spark)
         except AnalysisException:
             schema = getattr(self, "_last_schema", None)
             if schema is None or self._has_parquet_files():
@@ -234,10 +304,12 @@ class GpTable:
                 and os.path.isdir(self.path)
                 and self._heap_bytes() <= self.HEAP_ORDER_BYTES)
 
-    def insert_into(self, df: DataFrame) -> None:
+    def insert_into(self, df: DataFrame) -> int:
         """INSERT: append new files, placed per the distribution policy.
         BEFORE INSERT row triggers fire first: skip_when drops rows,
-        assignments rewrite NEW.
+        assignments rewrite NEW. Returns the rows inserted — the batch
+        after its triggers, so a skipped row is not counted (PG's
+        command tag).
 
         Inside the heap-order window the table is rewritten as a single
         file with the new rows at the end (heapam insertion order); the
@@ -248,21 +320,22 @@ class GpTable:
                 df = df.where(~F.coalesce(trig.skip_when, F.lit(False)))
             if trig.assignments:
                 df = self._trigger_project(df, trig)
-        if self._heap_window():
+        n = df.count()
+        if n <= self.HEAP_ORDER_ROWS and self._heap_window():
             try:
-                probe = df.limit(self.HEAP_ORDER_ROWS + 1).count()
-                if probe <= self.HEAP_ORDER_ROWS:
-                    spark = df.sparkSession
-                    try:
-                        cur = spark.read.parquet(self.path)
-                        combined = cur.unionAll(df.select(cur.columns))
-                    except AnalysisException:
-                        combined = df
-                    self._rewrite(combined.coalesce(1), placed=False)
-                    return
+                cur = self._scan(df.sparkSession)
             except AnalysisException:
-                pass
+                cur = None  # a directory with no data files yet
+            try:
+                combined = (
+                    df if cur is None else cur.unionAll(df.select(cur.columns))
+                )
+                self._rewrite(combined.coalesce(1), placed=False)
+                return n
+            except AnalysisException:
+                pass  # batch does not line up with the table: append it
         self._write(df, mode="append")
+        return n
 
     def delete_where(
         self, spark: SparkSession, cond: Column, returning: bool = False
@@ -272,7 +345,7 @@ class GpTable:
         matching rows (trigger-returns-NULL). Returns rows deleted, or
         with ``returning=True`` the OLD images of the deleted rows
         (DELETE ... RETURNING *), materialized before the rewrite."""
-        cur = spark.read.parquet(self.path)
+        cur = self._scan(spark)
         doomed = cond & ~cond.isNull()
         for trig in self._triggers("delete"):
             if trig.skip_when is not None:
@@ -312,7 +385,7 @@ class GpTable:
         for trig in self._triggers("update"):
             if trig.skip_when is not None:
                 upd = upd & ~F.coalesce(trig.skip_when, F.lit(False))
-        cur = spark.read.parquet(self.path)
+        cur = self._scan(spark)
         # resolve assignment targets case-insensitively (Spark's
         # resolver semantics) and REFUSE unknown columns — a silent
         # mismatch would rewrite the table unchanged while still
@@ -384,7 +457,7 @@ class GpTable:
             policytype="r" if replicated else "p",
             distkey=tuple(distributed_by or ()),
         )
-        self._rewrite(spark.read.parquet(self.path))
+        self._rewrite(self._scan(spark))
 
     def cluster_by(
         self, spark: SparkSession, cols: tuple[str, ...] | list[str]
@@ -401,7 +474,7 @@ class GpTable:
         happens within each placed partition, stored in ``self.sort_by``
         so later rewrites keep the order."""
         self.sort_by = tuple(cols)
-        cur = spark.read.parquet(self.path)
+        cur = self._scan(spark)
         tmp = f"{self.path}__cluster_{uuid.uuid4().hex[:8]}"
         writer = (
             self._placed(cur)
@@ -412,10 +485,7 @@ class GpTable:
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(tmp)
-        old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old)
+        self._swap_in(tmp, cur.schema)
 
     def drop_partition(self, spark: SparkSession, value) -> int:
         """ALTER TABLE ... DROP PARTITION (cdbpartition.c / tablecmds.c):
@@ -429,6 +499,7 @@ class GpTable:
             return 0
         n = spark.read.parquet(part_dir).count()
         shutil.rmtree(part_dir)
+        self._schema = None  # partition DDL: re-infer (module docstring)
         return n
 
     def exchange_partition(
@@ -462,6 +533,7 @@ class GpTable:
             shutil.rmtree(old)
         else:
             os.rename(tmp, part_dir)  # ADD PARTITION via exchange
+        self._schema = None  # partition DDL: re-infer (module docstring)
         return spark.read.parquet(part_dir).count()
 
     def split_partition(
@@ -526,6 +598,7 @@ class GpTable:
         for v, tmp in tmps.items():
             os.rename(tmp, dirs[v])
         shutil.rmtree(part_dir)
+        self._schema = None  # partition DDL: re-infer (module docstring)
         for v, d in dirs.items():
             counts[v] = spark.read.parquet(d).count()
         return counts[lo_val], counts[hi_val]
@@ -550,7 +623,7 @@ class GpTable:
             for p in _glob.glob(f"{self.path}/**/*.parquet", recursive=True)
         )
         want = max(1, -(-total // target_file_bytes))
-        cur = spark.read.parquet(self.path)
+        cur = self._scan(spark)
         tmp = f"{self.path}__vacuum_{uuid.uuid4().hex[:8]}"
         out = cur.repartition(want, *self.policy.distkey) if (
             self.policy.distkey and not self.policy.is_replicated
@@ -563,20 +636,14 @@ class GpTable:
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(tmp)
-        old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old)
+        self._swap_in(tmp, cur.schema)
         files_after = len(_glob.glob(f"{self.path}/**/*.parquet", recursive=True))
         return files_before, files_after
 
     def truncate(self, spark: SparkSession) -> None:
         """TRUNCATE TABLE: drop all rows, keep schema + policy
         (ExecuteTruncate, tablecmds.c — metadata-speed, no row scan)."""
-        empty = spark.createDataFrame(
-            [], spark.read.parquet(self.path).schema
-        )
-        self._rewrite(empty)
+        self._rewrite(spark.createDataFrame([], self.schema(spark)))
 
     def upsert(
         self,
@@ -593,7 +660,7 @@ class GpTable:
         matched-vs-existing, union the brand-new rows. Returns
         (n_updated, n_inserted). Incoming duplicates per key collapse to
         one (PG raises instead; first-wins here, documented)."""
-        cur = spark.read.parquet(self.path)
+        cur = self._scan(spark)
         incoming = df.dropDuplicates(conflict_keys)
         if update_cols is None:
             update_cols = [c for c in cur.columns if c not in conflict_keys]
@@ -641,7 +708,7 @@ class GpTable:
         rows with a match in ``using`` are deleted — a LEFT SEMI join
         decides the doomed set, then the complement is rewritten.
         BEFORE DELETE skip_when triggers veto as usual."""
-        cur = spark.read.parquet(self.path)
+        cur = self._scan(spark)
         before = cur.count()
         # survivors = rows with NO match (anti) plus matched rows kept by
         # a failed extra predicate or a trigger veto — never an anti-join
@@ -658,7 +725,7 @@ class GpTable:
                 )
         kept = anti.unionByName(semi.where(keep_cond))
         self._rewrite(kept)
-        return before - spark.read.parquet(self.path).count()
+        return before - self._scan(spark).count()
 
     def update_from(
         self,
@@ -679,7 +746,7 @@ class GpTable:
         target's OLD value and the update silently no-op; alias the
         source column (PG disambiguates with s.col, which DataFrame
         column references cannot express here)."""
-        cur = spark.read.parquet(self.path)
+        cur = self._scan(spark)
         src = source.dropDuplicates(join_keys)
         clash = [
             c for c in src.columns
@@ -768,12 +835,7 @@ class GpTable:
         if not placed:
             (df.write.mode("overwrite")
              .option("compression", self.compression).parquet(tmp))
-            old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
-            os.rename(self.path, old)
-            os.rename(tmp, self.path)
-            shutil.rmtree(old)
-            return
-        if self.partition_by and df.isEmpty():
+        elif self.partition_by and df.isEmpty():
             # an empty dynamic-partitioned write produces NO
             # schema-bearing files and a root-level part file would
             # conflict with later partition dirs — swap in a bare empty
@@ -789,7 +851,13 @@ class GpTable:
             if self.partition_by:
                 writer = writer.partitionBy(*self.partition_by)
             writer.parquet(tmp)
+        self._swap_in(tmp, df.schema)
+
+    def _swap_in(self, tmp: str, schema: StructType) -> None:
+        """Replace the table's directory with ``tmp``, freshly written
+        with ``schema``, and record that schema as the known one."""
         old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
         os.rename(self.path, old)
         os.rename(tmp, self.path)
         shutil.rmtree(old)
+        self._stored(schema, replaced=True)

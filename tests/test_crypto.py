@@ -4,11 +4,27 @@ concat — codegen-resident, no Python in the loop."""
 
 from __future__ import annotations
 
+import ctypes
+import ctypes.util
+
+import pytest
 from pyspark.sql import functions as F
 
 from gpdb_spark.functions.crypto import hmac_hex, reference_hmac_hex
 
 JEFE_SHA256 = "5bdcc146bf60754e6a042426089575c75a003f089d2739839dec58b964ec3843"
+
+
+def _glibc_crypt():
+    """crypt(3) from libcrypt through ctypes (the stdlib ``crypt``
+    module is gone in Python 3.13); skips where libcrypt is absent."""
+    name = ctypes.util.find_library("crypt")
+    if name is None:
+        pytest.skip("libcrypt unavailable")
+    fn = ctypes.CDLL(name).crypt
+    fn.argtypes = [ctypes.c_char_p, ctypes.c_char_p]
+    fn.restype = ctypes.c_char_p
+    return lambda pw, salt: fn(pw.encode(), salt.encode()).decode()
 
 
 def _compute(spark, data: str, key, algo: str) -> str:
@@ -61,16 +77,10 @@ def test_hmac_over_corpus_distinct(spark):
 def test_md5_crypt_glibc_vectors():
     """The pure-Python md5-crypt reference must be byte-identical to
     glibc's crypt(3) — an independent implementation of the same public
-    algorithm (crypt-md5.c). Skipped where the stdlib crypt module is
-    absent (removed in Python 3.13)."""
+    algorithm (crypt-md5.c). Skipped where libcrypt is absent."""
     from gpdb_spark.functions.crypt_md5 import md5_crypt
 
-    try:
-        import crypt as glibc_crypt  # noqa: F401 — deprecated since 3.11
-    except ImportError:
-        import pytest as _pytest
-
-        _pytest.skip("stdlib crypt unavailable")
+    glibc_crypt = _glibc_crypt()
     for pw, salt in [
         ("password", "ab01cd23"),
         ("", "xyz"),
@@ -78,9 +88,7 @@ def test_md5_crypt_glibc_vectors():
         ("a" * 40, "qrstuvwx"),
         ("it's a secret", "deadbeef"),
     ]:
-        assert md5_crypt(pw, f"$1${salt}") == glibc_crypt.crypt(
-            pw, f"$1${salt}$"
-        )
+        assert md5_crypt(pw, f"$1${salt}") == glibc_crypt(pw, f"$1${salt}$")
 
 
 def test_md5_crypt_verify_idiom():
@@ -357,13 +365,8 @@ def test_raw_cipher_stays_jvm_side(spark):
 def test_md5_crypt_randomized_vs_glibc():
     """500 random (password, salt) pairs against glibc crypt(3) — the
     strongest independent check of the key-stretching loop. Skipped
-    where the stdlib crypt module is absent (removed in 3.13)."""
-    try:
-        import crypt as glibc_crypt
-    except ImportError:
-        import pytest as _pytest
-
-        _pytest.skip("stdlib crypt unavailable")
+    where libcrypt is absent."""
+    glibc_crypt = _glibc_crypt()
     import random
     import string
 
@@ -377,7 +380,7 @@ def test_md5_crypt_randomized_vs_glibc():
             rng.choice(printable) for _ in range(rng.randrange(0, 24))
         )
         salt = "".join(rng.choice(alphabet) for _ in range(8))
-        assert md5_crypt(pw, f"$1${salt}") == glibc_crypt.crypt(
+        assert md5_crypt(pw, f"$1${salt}") == glibc_crypt(
             pw, f"$1${salt}$"
         ), (pw, salt)
 

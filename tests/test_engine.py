@@ -363,6 +363,62 @@ def test_dml_front_door(spark, tmp_path):
     assert sorted(r["id"] for r in e.table("dml_t").collect()) == [1, 2, 3]
 
 
+def test_dml_runs_no_schema_inference_jobs(spark, tmp_path):
+    """Every DML statement scans its table with the known schema: no
+    footer-reading schema-inference job (a ``parquet`` stage) besides
+    the statement's single write, and at most a count plus the write."""
+    from gpdb_spark.engine import Engine
+
+    e = Engine(spark)
+    src = spark.createDataFrame(
+        [(i, f"t{i}", float(i)) for i in range(1, 9)], "id long, tag string, val double")
+    e.create_table("jobs_t", src, str(tmp_path / "jobs_t"), distributed_by=("id",))
+    e.table("jobs_t").count()  # the table's first read
+    sc = spark.sparkContext
+    jvm_sc = spark._jsc.sc()
+
+    def stage_names(group, stmt):
+        sc.setJobGroup(group, stmt)
+        try:
+            n = e.execute_dml(stmt)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jvm_sc.listenerBus().waitUntilEmpty()
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup(group)
+        return n, jobs, [st.getStageInfo(s).name for j in jobs
+                         for s in st.getJobInfo(j).stageIds]
+
+    for group, stmt, want in [
+        ("dml-insert", "INSERT INTO jobs_t VALUES (9, 't9', 9.0), (10, 't10', 10.0)", 2),
+        ("dml-update", "UPDATE jobs_t SET val = val + 1 WHERE id BETWEEN 2 AND 4", 3),
+        ("dml-delete", "DELETE FROM jobs_t WHERE id >= 8", 3),
+    ]:
+        n, jobs, names = stage_names(group, stmt)
+        assert n == want, stmt
+        assert len(jobs) <= 3, (stmt, names)
+        assert sum(nm.startswith("parquet at") for nm in names) == 1, (stmt, names)
+    assert sorted(r.id for r in e.table("jobs_t").collect()) == [1, 2, 3, 4, 5, 6, 7]
+
+
+def test_insert_count_excludes_trigger_skipped_rows(spark, tmp_path):
+    """A BEFORE INSERT row trigger returning NULL skips the row, and
+    PG's command tag counts only the rows actually inserted."""
+    from gpdb_spark.engine import Engine
+    from gpdb_spark.storage import RowTrigger
+
+    e = Engine(spark)
+    src = spark.createDataFrame([(1, 10)], "id long, v long")
+    e.create_table("trig_ins", src, str(tmp_path / "trig_ins"), distributed_by=("id",))
+    e.gp_table("trig_ins").add_row_trigger(
+        RowTrigger(event="insert", skip_when=F.col("v") < 0))
+    n = e.execute_dml("INSERT INTO trig_ins VALUES (2, 20), (3, -1), (4, -5), (5, 50)")
+    assert n == 2
+    assert sorted((r.id, r.v) for r in e.table("trig_ins").collect()) == [
+        (1, 10), (2, 20), (5, 50)]
+    assert e.sql("INSERT INTO trig_ins VALUES (6, -6), (7, 70)").first()[0] == "INSERT 0 1"
+
+
 def test_session_control_statements(spark, sf_dir):
     """SET/SHOW/RESET GUCs and transaction commands pass through the
     front door the way ported PG scripts expect (guc.c / xact.c)."""

@@ -767,3 +767,113 @@ def test_rewrite_preserves_cluster_order(tmp_path, spark, nation_df):
     for f in glob.glob(f"{t.path}/*.parquet"):
         ids = pq.read_table(f, columns=["n_nationkey"])["n_nationkey"].to_pylist()
         assert ids == sorted(ids), f"unsorted after rewrite: {f}"
+
+
+def _assert_scan_parity(spark, t, label):
+    """The table's known-schema scan agrees with a fresh inferring scan
+    of its files: same schema, same rows."""
+    got = t.read(spark)
+    fresh = spark.read.parquet(t.path)
+    assert got.schema == fresh.schema, label
+    assert t.schema(spark) == fresh.schema, label
+    assert sorted(map(repr, got.collect())) == sorted(
+        map(repr, fresh.collect())), label
+
+
+def test_known_schema_parity_after_every_write(tmp_path, spark, monkeypatch):
+    """After every file-writing path the schema a GpTable scans with is
+    exactly what footer inference returns for its files, and the rows
+    agree: a stale known schema is never served."""
+    from gpdb_spark.engine import Engine
+
+    # non-nullable id (spark.range) and array elements: the known schema
+    # must come back nullable, as the file source reads it
+    src = spark.range(1, 7).selectExpr(
+        "id", "cast(id % 3 as int) AS k", "concat('n', id) AS name",
+        "cast(id * 1.5 as decimal(10,2)) AS amt",
+        "date_add(date'2024-01-01', cast(id as int)) AS d",
+        "array(id, id + 1) AS arr")
+    t = GpTable.create(src, str(tmp_path / "par"), distributed_by=("id",),
+                       num_buckets=2)
+    _assert_scan_parity(spark, t, "create")
+    batch = src.where("id <= 2").selectExpr(
+        "id + 6 AS id", "k", "name", "amt", "d", "arr")
+    assert t.insert_into(batch) == 2
+    _assert_scan_parity(spark, t, "insert (heap window)")
+    with monkeypatch.context() as m:
+        m.setattr(GpTable, "HEAP_ORDER_BYTES", 0)
+        assert t.insert_into(batch.selectExpr(
+            "id + 2 AS id", "k", "name", "amt", "d", "arr")) == 2
+        _assert_scan_parity(spark, t, "insert (placed append)")
+    assert t.update_set(spark, F.col("id") <= 3,
+                        {"name": F.lit("u"), "amt": F.col("amt") + 1}) == 3
+    _assert_scan_parity(spark, t, "update")
+    assert t.delete_where(spark, F.col("id") == 2) == 1
+    _assert_scan_parity(spark, t, "delete")
+    incoming = src.where("id IN (1, 3)").selectExpr(
+        "id", "k", "'up' AS name", "amt", "d", "arr").unionByName(
+        src.where("id = 1").selectExpr(
+            "id + 100 AS id", "k", "name", "amt", "d", "arr"))
+    assert t.upsert(spark, incoming, ["id"]) == (2, 1)
+    _assert_scan_parity(spark, t, "upsert")
+    doomed = spark.createDataFrame([(3,), (999,)], "key long")
+    assert t.delete_using(spark, doomed, F.col("id") == F.col("key")) == 1
+    _assert_scan_parity(spark, t, "delete_using")
+    mapping = spark.createDataFrame([(1, 7)], "id long, new_k int")
+    assert t.update_from(spark, mapping, ["id"], {"k": F.col("new_k")}) == 1
+    _assert_scan_parity(spark, t, "update_from")
+    t.alter_distribution(spark, replicated=True)
+    _assert_scan_parity(spark, t, "alter_distribution")
+    t.cluster_by(spark, ["k"])
+    _assert_scan_parity(spark, t, "cluster_by")
+    t.vacuum(spark)
+    _assert_scan_parity(spark, t, "vacuum")
+    t.truncate(spark)
+    _assert_scan_parity(spark, t, "truncate")
+    assert t.insert_into(batch) == 2
+    _assert_scan_parity(spark, t, "insert after truncate")
+
+    # partitioned: partition column types are inferred from directory
+    # names, so the value set decides them ("1","2" read as int; adding
+    # "x" turns the column into string) — every partition change must
+    # leave the table to re-infer
+    psrc = spark.createDataFrame(
+        [(1, "1", 1.0), (2, "1", None), (3, "2", 3.0), (4, "2", 9.0)],
+        "id long, grp string, v double")
+    p = GpTable.create(psrc, str(tmp_path / "ppar"), distributed_by=("id",),
+                       partition_by=("grp",), num_buckets=2)
+    _assert_scan_parity(spark, p, "partitioned create")
+    assert p.insert_into(spark.createDataFrame(
+        [(5, "x", 5.0)], "id long, grp string, v double")) == 1
+    _assert_scan_parity(spark, p, "partitioned insert of a new value")
+    assert p.delete_where(spark, F.col("id") == 5) == 1
+    _assert_scan_parity(spark, p, "partitioned delete")
+    p.exchange_partition(spark, "y", spark.createDataFrame(
+        [(6, "y", 6.0)], "id long, grp string, v double"))
+    _assert_scan_parity(spark, p, "exchange_partition")
+    assert p.drop_partition(spark, "y") == 1
+    _assert_scan_parity(spark, p, "drop_partition")
+    assert p.split_partition(spark, "2", split_col="v", at=5.0,
+                             into=("3", "z")) == (1, 1)
+    _assert_scan_parity(spark, p, "split_partition")
+    before = p.schema(spark)
+    p.truncate(spark)
+    # no data files remain: the read falls back to the last schema
+    empty = p.read(spark)
+    assert empty.schema == before and empty.count() == 0
+    assert p.insert_into(spark.createDataFrame(
+        [(7, "4", 7.0)], "id long, grp string, v double")) == 1
+    _assert_scan_parity(spark, p, "insert into truncated partitioned")
+
+    # engine ALTER TABLE ... ADD / RENAME / DROP COLUMN rewrite the
+    # column set through the same paths
+    e = Engine(spark)
+    g = e.create_table("par_alter", src, str(tmp_path / "par_alter"),
+                       distributed_by=("id",))
+    for stmt in ("ALTER TABLE par_alter ADD COLUMN extra int DEFAULT 5",
+                 "ALTER TABLE par_alter RENAME COLUMN name TO label",
+                 "ALTER TABLE par_alter DROP COLUMN amt"):
+        e.sql(stmt)
+        _assert_scan_parity(spark, g, stmt)
+    assert e.sql("SELECT label, extra FROM par_alter WHERE id = 1").first() == (
+        "n1", 5)

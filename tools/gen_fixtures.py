@@ -9,9 +9,9 @@ the same schemas and value distributions but a DIFFERENT seed; running
 ``SPARK_GRAFT_SIM_SF=/tmp/fuzz_sf0.01 python tools/driver_sim.py``
 then flushes out data-dependent fragility before the driver does.
 
-Usage: python tools/gen_fixtures.py [outdir] [seed] [scale] [raw]
-  scale multiplies row counts (default 1.0 == sf0.01 sizes).
-  A 4th arg "raw" writes FULL-PRECISION money columns (no pre-rounding
+Usage: python tools/gen_fixtures.py [--out DIR] [--seed N] [--scale X] [--raw]
+  --scale multiplies row counts (default 1.0 == sf0.01 sizes).
+  --raw writes FULL-PRECISION money columns (no pre-rounding
   to 2 decimals). Pre-rounded money structurally hides the
   double->decimal(12,2) cast divergence (Spark rounds the shortest
   decimal repr, DuckDB the binary value — 891/50k values in the
@@ -22,8 +22,8 @@ Usage: python tools/gen_fixtures.py [outdir] [seed] [scale] [raw]
 
 from __future__ import annotations
 
+import argparse
 import json
-import sys
 
 import numpy as np
 import pyarrow as pa
@@ -222,8 +222,14 @@ def main(outdir: str, seed: int = 1337, scale: float = 1.0,
 
 
 if __name__ == "__main__":
-    out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/fuzz_sf0.01"
-    seed = int(sys.argv[2]) if len(sys.argv) > 2 else 1337
-    scale = float(sys.argv[3]) if len(sys.argv) > 3 else 1.0
-    raw = len(sys.argv) > 4 and sys.argv[4].lower().startswith("raw")
-    main(out, seed, scale, raw)
+    ap = argparse.ArgumentParser(
+        description="Write a reseeded twin of the fixture tables.")
+    ap.add_argument("--out", default="/tmp/fuzz_sf0.01",
+                    help="output directory (default: %(default)s)")
+    ap.add_argument("--seed", type=int, default=1337)
+    ap.add_argument("--scale", type=float, default=1.0,
+                    help="row-count multiplier (1.0 == sf0.01 sizes)")
+    ap.add_argument("--raw", action="store_true",
+                    help="full-precision money columns (no 2-decimal rounding)")
+    args = ap.parse_args()
+    main(args.out, args.seed, args.scale, args.raw)
