@@ -71,6 +71,7 @@ literals and chained rewrites take the reverse).
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -5518,14 +5519,15 @@ def _pass_generate_series_from(tokens: list[str]) -> list[str]:
     i = 0
     n = len(tokens)
     while i < n:
+        # the call itself, not a select-list column of that name (the
+        # one _pass_srf_select_list leaves behind)
+        g = i + 2 if i + 1 < n and _is_word(tokens[i + 1], "lateral") \
+            else i + 1
         if (
             _is_word(tokens[i], "from", "join", ",")
             or tokens[i] == ","
-        ) and i + 1 < n and (
-            _is_word(tokens[i + 1], "generate_series")
-            or (_is_word(tokens[i + 1], "lateral") and i + 2 < n
-                and _is_word(tokens[i + 2], "generate_series"))
-        ):
+        ) and g + 1 < n and _is_word(tokens[g], "generate_series") \
+                and tokens[g + 1] == "(":
             out.append(tokens[i])
             if _is_word(tokens[i + 1], "lateral"):
                 # LATERAL SRF (gram.y: implicit for SRFs in PG) —
@@ -15610,43 +15612,51 @@ def _pass_array_subquery(tokens: list[str]) -> list[str]:
     return out
 
 
-def translate(sql: str, int_cols: frozenset[str] = frozenset(),
-              numeric_agg: bool = False,
-              f32_cols: frozenset[str] = frozenset(),
-              bin_cols: frozenset[str] = frozenset(),
-              bit_cols: frozenset[str] = frozenset(),
-              f64_cols: frozenset[str] = frozenset(),
-              net_cols: dict | None = None,
-              dt_cols: dict | None = None,
-              bp_cols: frozenset = frozenset(),
-              num_cols: frozenset = frozenset(),
-              tstext_cols: dict | None = None,
-              ts_now: str | None = None) -> str:
-    """Translate a PostgreSQL-dialect query to Spark SQL.
+@dataclass(frozen=True)
+class TypeContext:
+    """Catalog column types for one translation (the reference's parser
+    reads them from pg_attribute), keyed by lowercase bare column name.
+    The default knows no column: only literal-driven rewrites apply."""
 
-    ``int_cols`` — lowercase names of integer-typed columns (catalog type
-    info), enabling the PG integer-`/` truncation rewrite.
-    ``numeric_agg`` — PG-exact avg(int) NUMERIC typing (engine front
-    door; the registry queries keep Spark's double per the oracle
-    hashing policy).
-    ``bin_cols`` — bytea-typed columns (binary string_agg separators)."""
+    int_cols: frozenset[str] = frozenset()  # int2/4/8: int4div, avg->numeric
+    f32_cols: frozenset[str] = frozenset()  # float4
+    f64_cols: frozenset[str] = frozenset()  # float8
+    bin_cols: frozenset[str] = frozenset()  # bytea
+    bit_cols: frozenset[str] = frozenset()  # bit(n) / varbit(n)
+    bp_cols: frozenset[str] = frozenset()  # char(n): blank-padded
+    num_cols: frozenset[str] = frozenset()  # text-stored numeric
+    net_cols: dict | None = None  # uuid/macaddr/time col -> (kind, typmod)
+    dt_cols: dict | None = None  # date/timestamp col -> "date"|"timestamp"
+    tstext_cols: dict | None = None  # text-stored timestamp(p) col -> p
+    # PG NUMERIC aggregate typing: the Engine front door; the registry
+    # queries keep Spark's double per the oracle hashing policy
+    numeric_agg: bool = False
+    ts_now: str | None = None  # 'now' on timestamp(p); None: wall clock
+
+
+def translate(sql: str, types: TypeContext = TypeContext()) -> str:
+    """Translate a PostgreSQL-dialect query to Spark SQL. ``types``
+    carries the catalog column types the type-directed rewrites need;
+    the default knows no column (literal-driven rewrites only)."""
+    int_cols, f32_cols = types.int_cols, types.f32_cols
+    float_cols, dt_cols = f32_cols | types.f64_cols, types.dt_cols
     tokens = _lex(sql)
-    if numeric_agg and (int_cols or f32_cols):
+    if types.numeric_agg and (int_cols or f32_cols):
         tokens = _pass_avg_numeric(tokens, int_cols, f32_cols)
-    if numeric_agg:
+    if types.numeric_agg:
         tokens = _pass_numeric_stddev(tokens, int_cols, f32_cols)
-        tokens = _pass_numeric_text_window(tokens, num_cols)
-        tokens = _pass_numeric_text_arith(tokens, num_cols)
+        tokens = _pass_numeric_text_window(tokens, types.num_cols)
+        tokens = _pass_numeric_text_arith(tokens, types.num_cols)
     tokens = _pass_encode_decode(tokens)
-    tokens = _pass_string_agg_bytea(tokens, bin_cols)
-    tokens = _pass_bit_aggs(tokens, bit_cols)
-    tokens = _pass_netaddr(tokens, net_cols or {})
+    tokens = _pass_string_agg_bytea(tokens, types.bin_cols)
+    tokens = _pass_bit_aggs(tokens, types.bit_cols)
+    tokens = _pass_netaddr(tokens, types.net_cols or {})
     tokens = _pass_float_nan_literals(tokens)
-    tokens = _pass_float_guards(tokens, f32_cols | f64_cols)
+    tokens = _pass_float_guards(tokens, float_cols)
     tokens = _pass_unicode_literals(tokens)
     tokens = _pass_statement_forms(tokens)
     tokens = _pass_nested_on(tokens)
-    tokens = _pass_ts_text_cols(tokens, tstext_cols, ts_now)
+    tokens = _pass_ts_text_cols(tokens, types.tstext_cols, types.ts_now)
     tokens = _pass_setop_literal_scale(tokens)
     tokens = _pass_composite_casts(tokens)
     tokens = _pass_domain_casts(tokens)
@@ -15693,8 +15703,8 @@ def translate(sql: str, int_cols: frozenset[str] = frozenset(),
     tokens = _pass_jsonb_ops(tokens)
     tokens = _pass_tstz_literals(tokens)
     tokens = _pass_naive_tz(tokens)
-    tokens = _pass_float_int_round(tokens, f32_cols | f64_cols)
-    tokens = _pass_bpchar_casts(tokens, bp_cols)
+    tokens = _pass_float_int_round(tokens, float_cols)
+    tokens = _pass_bpchar_casts(tokens, types.bp_cols)
     tokens = _pass_casts(tokens)
     tokens = _pass_cast_as_types(tokens)
     tokens = _pass_interval_physical(tokens)
@@ -15739,7 +15749,7 @@ _INT_COLS_CACHE: dict[str, frozenset[str]] = {}
 _INTEGRAL_DTYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
-def _fixture_int_cols(spark: SparkSession, sf_dir: str) -> frozenset[str]:
+def _fixture_integer_cols(spark: SparkSession, sf_dir: str) -> frozenset[str]:
     """Lowercase names of integer-typed fixture columns — the catalog type
     info the reference's parser has via pg_attribute. Schema-only reads
     (parquet footers), cached per sf_dir."""
@@ -15780,7 +15790,7 @@ def _split_top_level_union(tokens: list[str]) -> tuple[list[str], list[str], boo
 
 
 def _try_recursive_cte(
-    spark: SparkSession, sql: str, int_cols: frozenset[str]
+    spark: SparkSession, sql: str, types: TypeContext
 ) -> DataFrame | None:
     """WITH RECURSIVE name[(cols)] AS (seed UNION [ALL] step) outer —
     routed through the operators.recursive fixpoint loop (the reference's
@@ -15832,7 +15842,7 @@ def _try_recursive_cte(
     seed_toks, step_toks, is_all = split
 
     def run(toks: list[str]) -> DataFrame:
-        return spark.sql(translate(_render(toks), int_cols))
+        return spark.sql(translate(_render(toks), types))
 
     seed = run(seed_toks)
     if col_names:
@@ -15871,22 +15881,13 @@ def _rewrite_soundex(sql: str) -> str:
 
 def pg_sql(
     spark: SparkSession, sql: str, sf_dir: str | None = None,
-    int_cols: frozenset[str] = frozenset(), numeric_agg: bool = False,
-    f32_cols: frozenset[str] = frozenset(),
-    bin_cols: frozenset[str] = frozenset(),
-    bit_cols: frozenset[str] = frozenset(),
-    f64_cols: frozenset[str] = frozenset(),
-    net_cols: dict | None = None,
-    dt_cols: dict | None = None,
-    bp_cols: frozenset = frozenset(),
-    num_cols: frozenset = frozenset(),
-    tstext_cols: dict | None = None,
-    ts_now: str | None = None,
+    types: TypeContext = TypeContext(),
 ) -> DataFrame:
     """The engine's SQL front door: PG-dialect text in, DataFrame out.
-    When ``sf_dir`` is given, the fixture tables are (re-)registered as
-    temp views first and their catalog types drive the PG integer-`/`
-    rewrite."""
+    ``types`` is the catalog type context every translation of the
+    statement uses (plain, EXPLAIN and each WITH RECURSIVE term). When
+    ``sf_dir`` is given, the fixture tables are (re-)registered as temp
+    views first and their integer columns join ``types.int_cols``."""
     # Spark 4 gates TimeType operations (extract/to_time/make_time/
     # arithmetic) behind this conf; the engine's time-of-day support
     # (_pass_time_literals) needs it on. Runtime-settable, idempotent.
@@ -15895,7 +15896,8 @@ def pg_sql(
         from gpdb_spark.catalog import register_fixture_views
 
         register_fixture_views(spark, sf_dir)
-        int_cols = int_cols | _fixture_int_cols(spark, sf_dir)
+        types = replace(types, int_cols=types.int_cols
+                        | _fixture_integer_cols(spark, sf_dir))
     stripped = sql.lstrip()
     if stripped[:7].lower() == "explain":
         # EXPLAIN [ANALYZE] <query>: one-row DataFrame with the plan in
@@ -15909,9 +15911,7 @@ def pg_sql(
         # recurse with sf_dir so the catalog-driven integer-`/` rewrite
         # applies: EXPLAIN must plan the SAME query that would execute
         # (with None the plan showed double division — review finding)
-        df = pg_sql(spark, body, sf_dir, int_cols, numeric_agg,
-                    f32_cols, bin_cols, bit_cols, f64_cols, net_cols,
-                    dt_cols, bp_cols, num_cols, tstext_cols, ts_now)
+        df = pg_sql(spark, body, sf_dir, types)
         if analyze:
             df._jdf.queryExecution().toRdd().count()
         plan = explain_motion(df)
@@ -15932,18 +15932,12 @@ def pg_sql(
     reg = register_pg_functions(spark)
     if "pg_soundex" in reg["registered"]:
         sql = _rewrite_soundex(sql)
-    if numeric_agg:
+    if types.numeric_agg:
         from gpdb_spark.functions.pg_numeric_agg import \
             register_numeric_agg_udfs
 
         register_numeric_agg_udfs(spark)
-    rec = _try_recursive_cte(spark, sql, int_cols)
+    rec = _try_recursive_cte(spark, sql, types)
     if rec is not None:
         return rec
-    return spark.sql(translate(sql, int_cols, numeric_agg=numeric_agg,
-                               f32_cols=f32_cols, bin_cols=bin_cols,
-                               bit_cols=bit_cols, f64_cols=f64_cols,
-                               net_cols=net_cols, dt_cols=dt_cols,
-                               bp_cols=bp_cols, num_cols=num_cols,
-                               tstext_cols=tstext_cols,
-                               ts_now=ts_now))
+    return spark.sql(translate(sql, types))

@@ -744,6 +744,8 @@ class Engine:
                 if m2:
                     new = _fold_ident(m2.group(1).strip('"'))
                     self._tables[new] = self._tables.pop(nm)
+                    self._rekey_cols(
+                        lambda k: (new, k[1]) if k[0] == nm else k)
                     self.spark.catalog.dropTempView(nm)
                     self._refresh(new)
                     return ok_tag
@@ -755,6 +757,8 @@ class Engine:
                     new = _fold_ident(m2.group(2).strip('"'))
                     gp._rewrite(
                         gp.read(self.spark).withColumnRenamed(old, new))
+                    self._rekey_cols(
+                        lambda k: (nm, new) if k == (nm, old) else k)
                     if old in gp.policy.distkey:
                         from gpdb_spark.storage import DistributionPolicy
                         gp.policy = DistributionPolicy(
@@ -796,6 +800,8 @@ class Engine:
                         raise ValueError(
                             f'cannot drop distribution-key column "{col}"')
                     gp._rewrite(gp.read(self.spark).drop(col))
+                    self._rekey_cols(
+                        lambda k: None if k == (nm, col) else k)
                     self._refresh(nm)
                     return ok_tag
                 m2 = _re.match(
@@ -1476,53 +1482,52 @@ class Engine:
             self._refresh_pg_enum()
             return self.spark.createDataFrame(
                 [("DROP TYPE",)], "status string")
-        if any(k == "ts" for (k, _n) in getattr(
-                self, "_typmod_cols", {}).values()):
+        return pg_sql(self.spark, s, self.sf_dir, types=self._types())
+
+    def _types(self):
+        """The dialect's TypeContext for this statement, derived from
+        the tables the Engine holds now (pg_attribute's role): Spark
+        types from each table's live schema (known without a job on a
+        warm table), declared typmods from ``_typmod_cols``. Registers
+        the UDFs the context's rewrites call."""
+        from gpdb_spark.dialect import TypeContext
+        from gpdb_spark.functions.pg_numeric_agg import \
+            register_numeric_agg_udfs
+
+        spark_types: dict[str, set[str]] = {}
+        for gp in self._tables.values():
+            for f in gp.schema(self.spark).fields:
+                spark_types.setdefault(f.dataType.simpleString(),
+                                       set()).add(f.name.lower())
+        typmods: dict[str, dict[str, int]] = {}
+        for (t, c), (k, n) in getattr(self, "_typmod_cols", {}).items():
+            if t in self._tables:
+                typmods.setdefault(k, {})[c] = n
+
+        def named(*names, within=spark_types):
+            return frozenset().union(*(within.get(n, ()) for n in names))
+
+        if "ts" in typmods:
             from gpdb_spark.functions.pg_timestamp import \
                 register_ts_udfs
             register_ts_udfs(self.spark)
-        return pg_sql(self.spark, s, self.sf_dir,
-                      int_cols=frozenset(
-                          getattr(self, "_int_cols", set())),
-                      numeric_agg=True,
-                      f32_cols=frozenset(
-                          getattr(self, "_f32_cols", set())),
-                      bin_cols=frozenset(
-                          c for cols in getattr(
-                              self, "_tbl_coltypes", {}).values()
-                          for c, t in cols if t == "binary"),
-                      bit_cols=frozenset(
-                          c for (_t, c), (k, _n) in getattr(
-                              self, "_typmod_cols", {}).items()
-                          if k in ("bit", "varbit")),
-                      f64_cols=frozenset(
-                          c for cols in getattr(
-                              self, "_tbl_coltypes", {}).values()
-                          for c, t in cols if t == "double"),
-                      net_cols={
-                          c: (k, n) for (_t, c), (k, n) in getattr(
-                              self, "_typmod_cols", {}).items()
-                          if k in ("uuid", "macaddr", "time")},
-                      dt_cols={
-                          c: ("date" if t == "date" else "timestamp")
-                          for cols in getattr(
-                              self, "_tbl_coltypes", {}).values()
-                          for c, t in cols
-                          if t in ("date", "timestamp",
-                                   "timestamp_ntz")},
-                      bp_cols=frozenset(
-                          c for (_t, c), (k, _n) in getattr(
-                              self, "_typmod_cols", {}).items()
-                          if k == "bpchar"),
-                      num_cols=frozenset(
-                          c for (_t, c), (k, _n) in getattr(
-                              self, "_typmod_cols", {}).items()
-                          if k == "numeric"),
-                      tstext_cols={
-                          c: n for (_t, c), (k, n) in getattr(
-                              self, "_typmod_cols", {}).items()
-                          if k == "ts"},
-                      ts_now=self._session_now())
+        register_numeric_agg_udfs(self.spark)
+        return TypeContext(
+            int_cols=named("tinyint", "smallint", "int", "bigint"),
+            f32_cols=named("float"),
+            f64_cols=named("double"),
+            bin_cols=named("binary"),
+            bit_cols=named("bit", "varbit", within=typmods),
+            bp_cols=named("bpchar", within=typmods),
+            num_cols=named("numeric", within=typmods),
+            net_cols={c: (k, n) for k in ("uuid", "macaddr", "time")
+                      for c, n in typmods.get(k, {}).items()},
+            dt_cols={**dict.fromkeys(named("date"), "date"),
+                     **dict.fromkeys(named("timestamp", "timestamp_ntz"),
+                                     "timestamp")},
+            tstext_cols=typmods.get("ts", {}),
+            numeric_agg=True,
+            ts_now=self._session_now())
 
     def obj_description(self, name: str, objtype: str = "table") -> str | None:
         """obj_description() (pg_description lookup)."""
@@ -1575,7 +1580,7 @@ class Engine:
         from gpdb_spark.dialect import translate
 
         self._prepared = getattr(self, "_prepared", {})
-        self._prepared[name] = translate(text)
+        self._prepared[name] = translate(text, self._types())
 
     def execute(self, name: str, *params) -> DataFrame:
         """EXECUTE name (v1, v2, ...) (exec_bind_message + PortalRun):
@@ -1756,46 +1761,35 @@ class Engine:
             pass
 
     def _unbind_table_cols(self, nm: str) -> None:
-        """Forget a dropped table's column-type catalog bindings
-        (ADVICE r09 #2): the dialect's bare-name _GEO_COLS/_ENUM_COLS
-        routing and the engine's _int_cols/_f32_cols sets are derived
-        catalogs — a stale entry misroutes a same-named column created
-        later with a different type (CREATE t(c point); DROP t;
-        CREATE t(c text) rewrote c through geo operators)."""
+        """Forget a dropped table's column-type records (ADVICE r09 #2):
+        a stale entry misroutes a same-named column created later with
+        a different type (CREATE t(c point); DROP t; CREATE t(c text)
+        rewrote c through geo operators)."""
+        self._rekey_cols(lambda key: None if key[0] == nm else key)
+
+    def _rekey_cols(self, move) -> None:
+        """Apply ``move`` — (table, column) key -> new key, or None to
+        forget it — to the per-table typmod, geo and enum records, and
+        rebind the dialect's bare-name geo/enum routing of every column
+        name that moved to a surviving table's binding (bare-name keying
+        is the translate-time reality — no table context there)."""
         from gpdb_spark import dialect as _d
 
-        for key in [k for k in getattr(self, "_typmod_cols", {})
-                    if k[0] == nm]:
-            self._typmod_cols.pop(key)
-        for attr, bare in (("_geo_tbl_cols", _d._GEO_COLS),
+        for attr, bare in (("_typmod_cols", None),
+                           ("_geo_tbl_cols", _d._GEO_COLS),
                            ("_enum_tbl_cols", _d._ENUM_COLS)):
             tblmap = getattr(self, attr, {})
-            for key in [k for k in tblmap if k[0] == nm]:
-                col = key[1]
-                tblmap.pop(key)
-                # rebind the bare-name routing to a surviving table's
-                # binding if one exists (bare-name keying is the
-                # translate-time reality — no table context there)
-                remain = [v for (t, c), v in tblmap.items() if c == col]
+            old = dict(tblmap)
+            tblmap.clear()
+            tblmap.update({new: v for k, v in old.items() if (new := move(k))})
+            if bare is None:
+                continue
+            for col in {c for _t, c in old.keys() ^ tblmap.keys()}:
+                remain = [v for (_t, c), v in tblmap.items() if c == col]
                 if remain:
                     bare[col] = remain[-1]
                 else:
                     bare.pop(col, None)
-        # integer/float4 catalogs: recompute exactly from the per-table
-        # schema records of the surviving tables
-        coltypes = getattr(self, "_tbl_coltypes", {})
-        coltypes.pop(nm, None)
-        ints, f32s = set(), set()
-        for cols in coltypes.values():
-            for c, t in cols:
-                if t in ("tinyint", "smallint", "int", "bigint"):
-                    ints.add(c)
-                elif t == "float":
-                    f32s.add(c)
-        if hasattr(self, "_int_cols"):
-            self._int_cols &= ints
-        if hasattr(self, "_f32_cols"):
-            self._f32_cols &= f32s
 
     def create_materialized_view(
         self, name: str, text: str, path: str
@@ -1842,23 +1836,6 @@ class Engine:
             mode=mode,
         )
         self._tables[name] = table
-        # catalog type info for the dialect: integer-typed columns
-        # drive the PG integer-/ rewrite and avg(int) NUMERIC typing.
-        # _tbl_coltypes keeps the per-table record so DROP TABLE can
-        # recompute the bare-name sets exactly (ADVICE r09 #2).
-        self._int_cols = getattr(self, "_int_cols", set())
-        self._f32_cols = getattr(self, "_f32_cols", set())
-        self._tbl_coltypes = getattr(self, "_tbl_coltypes", {})
-        self._tbl_coltypes[name] = [
-            (f.name.lower(), f.dataType.simpleString())
-            for f in df.schema.fields
-        ]
-        for f in df.schema.fields:
-            if f.dataType.simpleString() in ("tinyint", "smallint",
-                                             "int", "bigint"):
-                self._int_cols.add(f.name.lower())
-            elif f.dataType.simpleString() == "float":
-                self._f32_cols.add(f.name.lower())
         table.read(self.spark).createOrReplaceTempView(name)
         self._refresh_pg_class()
         return table
@@ -1940,6 +1917,8 @@ class Engine:
         numeric columns — and string literals at ``date_pos`` run
         through PG's flexible date input ('20200112' into a DATE
         column; datetime.c DecodeDateTime on the INSERT path)."""
+        import re as _re
+
         from gpdb_spark.dialect import _lex, _pg_date_literal
 
         toks = _lex(rest)
@@ -1972,7 +1951,13 @@ class Engine:
                 for xi, it in enumerate(items):
                     if xi:
                         out.append(",")
-                    if xi in pos:
+                    if xi in pos and _re.fullmatch(
+                            r"-?(\d+\.?\d*|\.\d+)(e[-+]?\d+)?",
+                            "".join(it), _re.I):
+                        # a numeric literal keeps its own text (1e-21
+                        # has dscale 21; through double it reads 1.0E-21)
+                        out.append(f"'{''.join(it)}'")
+                    elif xi in pos:
                         out += ["CAST", "("] + it + ["AS", "STRING",
                                                      ")"]
                     elif xi in date_pos and len(it) == 1 \
@@ -2501,6 +2486,7 @@ class Engine:
         from gpdb_spark.dialect import _lex, translate
 
         s = text.strip().rstrip(";")
+        types = self._types()
         m = _re.match(r"(?is)^\s*insert\s+into\s+(\w+)\s*(\([^)]*\))?\s*(.*)$", s)
         if m:
             name, cols, rest = _fold_ident(m.group(1)), m.group(2), m.group(3)
@@ -2532,7 +2518,8 @@ class Engine:
                     if pos or dpos:
                         rest = self._values_string_positions(
                             rest, pos, dpos)
-                df = self.spark.sql(translate(f"SELECT * FROM ({rest})"))
+                df = self.spark.sql(
+                    translate(f"SELECT * FROM ({rest})", types))
             else:
                 df = self.sql(rest)
             if cols:
@@ -2655,10 +2642,10 @@ class Engine:
                 frag = toks[a + 1 : b]
                 eq = frag.index("=")
                 col = _fold_ident(frag[eq - 1])
-                expr_sql = translate(" ".join(frag[eq + 1 :]))
+                expr_sql = translate(" ".join(frag[eq + 1 :]), types)
                 assignments[col] = Fn.expr(expr_sql)
             cond = (
-                Fn.expr(translate(" ".join(toks[where_at + 1 :])))
+                Fn.expr(translate(" ".join(toks[where_at + 1 :]), types))
                 if where_at is not None
                 else Fn.lit(True)
             )
@@ -2706,7 +2693,8 @@ class Engine:
                 cond_sql = _re.sub(
                     rf"(?i)\b{_re.escape(name)}\s*\.\s*", "", cond_sql)
             cond = (
-                Fn.expr(translate(cond_sql)) if cond_sql else Fn.lit(True)
+                Fn.expr(translate(cond_sql, types)) if cond_sql
+                else Fn.lit(True)
             )
             return self.delete_where(name, cond, only=only)
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from gpdb_spark.dialect import pg_sql, translate
+from gpdb_spark.dialect import TypeContext, pg_sql, translate
 
 
 def test_cast_translation():
@@ -82,7 +82,7 @@ def test_json_arrows():
 
 
 def test_int_division():
-    ic = frozenset({"o_orderkey", "o_custkey"})
+    ic = TypeContext(int_cols=frozenset({"o_orderkey", "o_custkey"}))
     assert "o_orderkey div 7" in translate("SELECT o_orderkey / 7 FROM o", ic)
     assert "o_orderkey div o_custkey" in translate(
         "SELECT o_orderkey / o_custkey FROM o", ic
@@ -3006,18 +3006,18 @@ class TestDateEdges:
     5-digit-year GUC (date.c, timestamp.c, datetime.c)."""
 
     def test_date_minus_date_is_days(self):
-        from gpdb_spark.dialect import translate
+        from gpdb_spark.dialect import TypeContext, translate
 
         assert "datediff" in translate(
             "SELECT f1 - date '2000-01-01' FROM t",
-            dt_cols={"f1": "date"})
+            types=TypeContext(dt_cols={"f1": "date"}))
         # date - int stays date arithmetic
         assert "datediff" not in translate(
-            "SELECT f1 - 3 FROM t", dt_cols={"f1": "date"})
+            "SELECT f1 - 3 FROM t", types=TypeContext(dt_cols={"f1": "date"}))
         # timestamp - timestamp is interval, not days
         assert "datediff" not in translate(
             "SELECT a - b FROM t",
-            dt_cols={"a": "timestamp", "b": "timestamp"})
+            types=TypeContext(dt_cols={"a": "timestamp", "b": "timestamp"}))
 
     def test_bc_date_literal_folds_image(self):
         import pytest
@@ -3150,16 +3150,16 @@ class TestJoinSubqueryForms:
         assert "__in_values__" in out
 
     def test_bpchar_cast_pads_and_trims(self):
-        from gpdb_spark.dialect import translate
+        from gpdb_spark.dialect import TypeContext, translate
 
         assert translate("SELECT 'abcde'::char(4)") \
             == "SELECT rpad(substring(CAST(('abcde') AS STRING)," \
                " 1, 4), 4, ' ')"
         assert translate("SELECT CAST(f1 AS varchar) FROM t",
-                         bp_cols=frozenset({"f1"})) \
+                         types=TypeContext(bp_cols=frozenset({"f1"}))) \
             == "SELECT rtrim(f1) FROM t"
         assert translate("SELECT c.f1::text FROM t c",
-                         bp_cols=frozenset({"f1"})) \
+                         types=TypeContext(bp_cols=frozenset({"f1"}))) \
             == "SELECT rtrim(c.f1) FROM t c"
         # non-bpchar columns keep the plain cast
         assert translate("SELECT CAST(f1 AS varchar) FROM t") \

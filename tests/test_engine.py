@@ -2042,3 +2042,107 @@ def test_timestamp_typmod_text_column(spark, sf_dir):
         eng.sql("DROP TABLE r11ts")
         d.set_date_style("iso")
         d.set_interval_style("postgres")
+
+
+def test_every_statement_form_sees_live_column_types(spark):
+    """One table, one type context: SELECT, UPDATE, DELETE, PREPARE and
+    WITH RECURSIVE all see ``a`` as int4 (int4div truncates, avg(int4)
+    is numeric), and ALTER TABLE ADD/RENAME COLUMN are visible at once
+    because the context is derived from the table's live schema."""
+    eng = Engine(spark)
+    eng.sql("CREATE TABLE tc_w (a int, b float8) DISTRIBUTED BY (a)")
+    try:
+        eng.sql("INSERT INTO tc_w VALUES (5, 0), (6, 0), (7, 0)")
+        assert [r.d for r in eng.sql(
+            "SELECT a/2 AS d FROM tc_w ORDER BY a").collect()] == [2, 3, 3]
+        eng.sql("UPDATE tc_w SET b = a/2")
+        assert sorted(r.b for r in eng.table("tc_w").collect()) == [
+            2.0, 3.0, 3.0]
+        assert eng.sql(
+            "WITH RECURSIVE r(n) AS (SELECT 1 UNION ALL SELECT n + 1"
+            " FROM r WHERE n < 3) SELECT avg(a) AS m FROM tc_w"
+        ).dtypes == [("m", "decimal(38,16)")]
+        assert eng.sql("DELETE FROM tc_w WHERE a/2 = 3").first()[0] \
+            == "DELETE 2"
+        eng.sql("PREPARE tc_p AS SELECT a/2 AS d FROM tc_w")
+        got = eng.sql("EXECUTE tc_p")
+        assert dict(got.dtypes)["d"] in ("int", "bigint")
+        assert [r.d for r in got.collect()] == [2]
+        eng.sql("ALTER TABLE tc_w ADD COLUMN c int DEFAULT 7")
+        assert eng.sql("SELECT c/2 AS d FROM tc_w").first().d == 3
+        eng.sql("ALTER TABLE tc_w RENAME COLUMN a TO z")
+        got = eng.sql("SELECT z/2 AS d, avg(z) AS m FROM tc_w GROUP BY z")
+        assert dict(got.dtypes)["d"] in ("int", "bigint")
+        assert dict(got.dtypes)["m"] == "decimal(38,16)"
+        assert got.first().d == 2
+    finally:
+        eng.sql("DROP TABLE tc_w")
+
+
+def test_typmod_records_follow_alter(spark):
+    """ALTER TABLE RENAME TO / RENAME COLUMN / DROP COLUMN carry the
+    table's declared-type records along: char(n) keeps bpchar
+    semantics under its new names, and a dropped table leaves no
+    record behind to misroute a same-named column of another type."""
+    from gpdb_spark import dialect as _d
+
+    eng = Engine(spark)
+    eng.sql("CREATE TABLE tc_u (k int, w char(4)) DISTRIBUTED BY (k)")
+    eng.sql("INSERT INTO tc_u VALUES (7, 'ab')")
+    eng.sql("ALTER TABLE tc_u RENAME TO tc_u2")
+    assert eng.sql("SELECT w::varchar || '|' AS s FROM tc_u2").first().s \
+        == "ab|"
+    eng.sql("ALTER TABLE tc_u2 RENAME COLUMN w TO w2")
+    assert eng.sql("SELECT w2::varchar || '|' AS s FROM tc_u2").first().s \
+        == "ab|"
+    eng.sql("ALTER TABLE tc_u2 DROP COLUMN w2")
+    eng.sql("ALTER TABLE tc_u2 ADD COLUMN w2 text DEFAULT 'ab  '")
+    assert eng.sql("SELECT w2::varchar || '|' AS s FROM tc_u2").first().s \
+        == "ab  |"
+    eng.sql("DROP TABLE tc_u2")
+    eng.sql("CREATE TABLE tc_v (k float8, w text) DISTRIBUTED BY (k)")
+    try:
+        eng.sql("INSERT INTO tc_v VALUES (7, 'ab  ')")
+        assert eng.sql("SELECT k/2 AS d FROM tc_v").first().d == 3.5
+        assert eng.sql("SELECT w::varchar || '|' AS s FROM tc_v").first().s \
+            == "ab  |"
+    finally:
+        eng.sql("DROP TABLE tc_v")
+    # geo routing follows a renamed table and is unbound by its DROP
+    eng.sql("CREATE TABLE tc_g (tcg point) DISTRIBUTED BY (tcg)")
+    eng.sql("ALTER TABLE tc_g RENAME TO tc_g2")
+    assert _d._GEO_COLS.get("tcg") == "point"
+    eng.sql("DROP TABLE tc_g2")
+    assert "tcg" not in _d._GEO_COLS
+
+
+def test_pg_contract_passes(spark):
+    """PG results that only the left/right, select-list SRF, numeric
+    window and error-contract passes produce (Spark alone answers
+    differently or not at all)."""
+    import pytest as _pt
+
+    eng = Engine(spark)
+    r = eng.sql("SELECT left('abcde', -2) AS l, right('abcde', -2) AS r,"
+                " right('ab', 5) AS r2").first()
+    assert (r.l, r.r, r.r2) == ("abc", "cde", "ab")
+    eng.sql("CREATE TABLE tc_srf (a int) DISTRIBUTED BY (a)")
+    eng.sql("CREATE TABLE tc_num (a int, v numeric) DISTRIBUTED BY (a)")
+    try:
+        eng.sql("INSERT INTO tc_srf VALUES (1), (2)")
+        assert sorted(tuple(r) for r in eng.sql(
+            "SELECT a, generate_series(1, 2) FROM tc_srf").collect()) == [
+            (1, 1), (1, 2), (2, 1), (2, 2)]
+        eng.sql("INSERT INTO tc_num VALUES (1, 12345678901234567890.123),"
+                " (2, 1e-21)")
+        assert [r.s for r in eng.sql(
+            "SELECT sum(v) OVER (ORDER BY a) AS s FROM tc_num ORDER BY a"
+        ).collect()] == ["12345678901234567890.123",
+                         "12345678901234567890.123000000000000000001"]
+    finally:
+        eng.sql("DROP TABLE tc_srf")
+        eng.sql("DROP TABLE tc_num")
+    with _pt.raises(Exception, match="null character not permitted"):
+        eng.sql("SELECT chr(0) AS c").collect()
+    with _pt.raises(Exception, match="integer out of range"):
+        eng.sql("SELECT (-2147483648)::int4 / (-1)::int4 AS d").collect()
