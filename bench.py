@@ -11,6 +11,9 @@ training-data-pipeline operators, i.e. the shapes whose plans matter at
 the (small) result; input caching is NOT used so scan+shuffle cost is
 measured, matching how the reference's perf harness times full scripts
 (src/test/performance/runtests.pl).
+
+This module is the repo's one timing harness: ``queries()``, ``warm()``
+and ``best_of()`` are also what ``tools/perf_probe.py`` times with.
 """
 
 from __future__ import annotations
@@ -38,7 +41,7 @@ HEADLINE = [
     "mdqa_multi_distinct",
     # set ops / dedup
     "setop_except_all",
-    "dedup_minhash_clusters",  # resolved to the xxhash64 fast path below
+    "dedup_minhash_clusters",  # resolved to the xxhash64 fast path in queries()
     # scale-path custom joins
     "join_range_binned",
     "events_asof_join",
@@ -48,33 +51,25 @@ HEADLINE = [
     "text_quality_score",
 ]
 
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    try:
-        sf_val = float(sf)
-    except ValueError:
-        sf_val = sf
-
-    from gpdb_spark.session import get_spark
-    from gpdb_spark.registry import QUERIES as _REG
+def queries() -> dict:
+    """Every registered query by name, as the harness times them."""
+    from gpdb_spark.registry import QUERIES
     import gpdb_spark.queries  # noqa: F401 — populate registry
     from gpdb_spark.queries.datapipe_dedup import dedup_minhash_clusters_fast
 
     # Bench the xxhash64 minhash fast path (the variant timed since r01)
-    # even though queries() now registers the oracled portable family
-    # under the same name — keeps per-query numbers comparable across
-    # rounds while the driver's correctness row attests the operator.
-    QUERIES = dict(_REG)
-    QUERIES["dedup_minhash_clusters"] = dedup_minhash_clusters_fast
+    # even though the registry holds the oracled portable family under
+    # the same name — keeps per-query numbers comparable across rounds
+    # while the driver's correctness row attests the operator.
+    return {**QUERIES, "dedup_minhash_clusters": dedup_minhash_clusters_fast}
 
-    spark = get_spark(app_name="gpdb_spark_bench")
-    spark.sparkContext.setLogLevel("ERROR")
 
+def warm(spark, names, sf_dir: str) -> None:
+    """Pay a session's one-time costs so timed runs measure the engine."""
+    qs = queries()
     # warm the JVM/codegen paths once so per-query numbers measure the
     # engine, not one-time session setup
-    QUERIES["q01_pricing_summary"](spark, sf_dir).collect()
+    qs["q01_pricing_summary"](spark, sf_dir).collect()
 
     # warm the Python worker pool the same way: the first pandas-UDF
     # stage of a session forks one worker per core and imports
@@ -94,7 +89,7 @@ def main() -> None:
     ).collect()
 
     # warm whole-stage-codegen compilation the same way: run every
-    # headline query once at the smallest SF. Generated-class caching is
+    # named query once at the smallest SF. Generated-class caching is
     # keyed on the generated source (schema + expressions, not data), so
     # the timed sf run then measures data movement and compute — the
     # steady state of a production engine — instead of one-time Janino
@@ -105,47 +100,72 @@ def main() -> None:
         "SPARK_GRAFT_WARM_SF_DIR", "/root/testdata/sf0.001"
     )
     if warm_dir and os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        for name in HEADLINE:
-            fn = QUERIES.get(name)
+        for name in names:
+            fn = qs.get(name)
             if fn is not None:
                 try:
                     fn(spark, warm_dir).collect()
                 except Exception as exc:  # never fail the bench on warmup
                     print(f"warmup {name}: {exc}", file=sys.stderr)
 
-    # best-of-2 per query: single-shot numbers on a shared box carry
-    # ±5x interference noise on individual heavy queries (observed:
-    # the same query 3.7 s or 30 s depending on co-tenant load); the
-    # minimum of two runs is the standard least-interference estimate
-    # and is still a full cold-cache execution each time (no df.cache()
-    # anywhere — only codegen and worker pools are warm, as in
-    # steady-state production)
-    times: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = QUERIES.get(name)
-        if fn is None:
-            continue
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.collect()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        times[name] = round(best, 3)
 
-    total = round(sum(times.values()), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": times,
-                "sf": sf_val,
-            }
-        )
-    )
+def best_of(spark, fn, sf_dir: str, runs: int, sink: str) -> float:
+    """Best wall seconds of ``runs`` full executions of query ``fn``.
+
+    ``sink`` is "collect" (the bench's driver-side collect of the small
+    result) or "noop" (Spark's noop writer: every column of every row is
+    computed, nothing is shipped to the driver).
+
+    Best-of-N: single-shot numbers on a shared box carry ±5x
+    interference noise on individual heavy queries (observed: the same
+    query 3.7 s or 30 s depending on co-tenant load); the minimum is the
+    standard least-interference estimate and is still a full cold-cache
+    execution each time (no df.cache() anywhere — only codegen and
+    worker pools are warm, as in steady-state production).
+    """
+    best = None
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        if sink == "noop":
+            df.write.format("noop").mode("overwrite").save()
+        else:
+            df.collect()
+        dt = time.perf_counter() - t0
+        best = dt if best is None else min(best, dt)
+    return best
+
+
+def result(times: dict[str, float], sf_dir: str) -> dict:
+    """The bench's one-line JSON record for per-query best times."""
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    try:
+        sf_val = float(sf)
+    except ValueError:
+        sf_val = sf
+    return {
+        "metric": "headline_queries_total_wall",
+        "value": round(sum(times.values()), 3),
+        "unit": "sec",
+        "queries": times,
+        "sf": sf_val,
+    }
+
+
+def main() -> None:
+    from gpdb_spark.catalog import DEFAULT_SF_DIR as sf_dir
+    from gpdb_spark.session import get_spark
+
+    spark = get_spark(app_name="gpdb_spark_bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    warm(spark, HEADLINE, sf_dir)
+    qs = queries()
+    times = {
+        name: round(best_of(spark, qs[name], sf_dir, 2, "collect"), 3)
+        for name in HEADLINE
+        if name in qs
+    }
+    print(json.dumps(result(times, sf_dir)))
 
 
 if __name__ == "__main__":

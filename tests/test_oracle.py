@@ -1,68 +1,73 @@
 """Mirror of the driver's correctness gate: run every registered query on
-Spark AND its DuckDB oracle SQL on the same parquet, compare row count,
-column names, and the order-insensitive multiset of values.
-
-This is the atmsort/gpdiff idea from the reference's pg_regress harness
-(src/test/regress/atmsort.pl): results compare order-insensitively unless
-the query itself pins an ORDER BY.
+Spark AND its DuckDB oracle SQL on the same parquet, and judge the pair
+with tools/dtype_parity.compare — column names, dtype families, row
+count and the order-insensitive multiset of values, the same verdict
+tools/driver_sim.py prints.
 """
 
 from __future__ import annotations
 
+import datetime
 import math
-from datetime import datetime
 
+import duckdb
 import pytest
+from pyspark.sql.types import LongType, StructField, StructType
 
 import gpdb_spark.queries  # noqa: F401 — populates the registry
 from gpdb_spark.registry import ORACLE, QUERIES
-
-
-def _norm_val(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == 0.0:
-            return 0.0
-        return v
-    if isinstance(v, datetime):
-        # Driver parity (VERDICT r08 What's-wrong #1): a tz-aware value
-        # in a compared column is a guaranteed driver red (DuckDB hands
-        # pandas datetime64[us, UTC]; Spark collects naive). Refusing
-        # here keeps this gate at least as strict as the driver.
-        if v.tzinfo is not None:
-            raise TypeError(
-                "tz-aware datetime in compared output — serialize with "
-                "(x AT TIME ZONE 'UTC')::text on both sides"
-            )
-        return v
-    return v
-
-
-def normalize(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i].lower())
-    out = [tuple(_norm_val(r[i]) for i in order) for r in rows]
-    return sorted(out, key=repr)
+from tools.dtype_parity import canon_rows, compare
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE))
 def test_oracle(name, spark, duck, sf_dir):
-    sdf = QUERIES[name](spark, sf_dir)
-    scols = list(sdf.columns)
-    srows = [tuple(r) for r in sdf.collect()]
+    v = compare(QUERIES[name](spark, sf_dir), duck, ORACLE[name])
+    assert v.problem is None, f"{name}: {v.problem}"
 
-    cur = duck.execute(ORACLE[name])
-    ocols = [d[0] for d in cur.description]
-    orows = cur.fetchall()
 
-    assert sorted(c.lower() for c in scols) == sorted(c.lower() for c in ocols), (
-        f"{name}: column names differ: spark={scols} oracle={ocols}"
+class _Result:
+    """The part of a Spark DataFrame that compare() reads."""
+
+    def __init__(self, schema, rows):
+        self.schema, self._rows = schema, rows
+
+    def collect(self):
+        return self._rows
+
+
+def test_canon_rows_refuses_what_the_driver_cannot_compare():
+    utc = datetime.timezone.utc
+    for cell in ([1], {"a": 1}, datetime.datetime(2024, 1, 1, tzinfo=utc)):
+        with pytest.raises(TypeError):
+            canon_rows([(cell,)], ["c"])
+    naive = datetime.datetime(2024, 1, 1)
+    assert canon_rows([(naive,)], ["c"]) == [(naive,)]
+
+
+def test_canon_rows_is_order_insensitive_and_value_exact():
+    assert canon_rows([(float("nan"),)], ["x"]) == canon_rows(
+        [(math.nan,)], ["x"]
     )
-    a = normalize(srows, scols)
-    b = normalize(orows, ocols)
-    assert len(a) == len(b), f"{name}: row count {len(a)} != {len(b)}"
-    mismatches = [(x, y) for x, y in zip(a, b) if x != y]
-    assert a == b, f"{name}: first mismatches: {mismatches[:3]}"
+    # -0.0 and 0.0 are equal but repr-sort apart; canonicalised they land
+    # in the same position, so these two results compare equal
+    assert canon_rows([(-0.0, "b"), (0.0, "a")], ["x", "y"]) == canon_rows(
+        [(0.0, "b"), (-0.0, "a")], ["x", "y"]
+    )
+    assert canon_rows([(1, "a"), (2, "b")], ["n", "S"]) == canon_rows(
+        [("b", 2), ("a", 1)], ["s", "N"]
+    )
+
+
+def test_compare_reports_int_vs_hugeint_as_dtype_skew():
+    con = duckdb.connect()
+    try:
+        spark_side = _Result(StructType([StructField("n", LongType())]), [(1,)])
+        v = compare(spark_side, con, "SELECT 1::HUGEINT AS n")
+        assert (v.spark_rows, v.oracle_rows) == (1, 1)
+        assert v.problem == "DTYPE-SKEW n: spark=int duck=int128"
+        assert compare(spark_side, con, "SELECT 1::BIGINT AS n").problem is None
+    finally:
+        con.close()
 
 
 def test_no_decimal_compared_outputs(duck):

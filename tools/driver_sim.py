@@ -1,28 +1,32 @@
 """Simulate the driver: import __spark_entry__, smoke entry(), run every
-queries() entry vs oracle_sql() on DuckDB at sf0.01, order-insensitive.
+queries() entry vs oracle_sql() on DuckDB at sf0.01, order-insensitive,
+judged by tools/dtype_parity.compare (the same verdict tests/test_oracle.py
+asserts on).
 
 Set SPARK_GRAFT_SIM_SF to point at a different fixture dir — e.g. a
 reseeded twin from tools/gen_fixtures.py — to fuzz for data-dependent
-fragility (the driver regenerates its tables every round)."""
-import os, sys, math, datetime
-sys.path.insert(0, '/root/repo')
-import __spark_entry__ as E
-from tools.dtype_parity import dtype_mismatches
-from pyspark.sql import SparkSession
+fragility (the driver regenerates its tables every round). Query names
+as arguments check only those queries."""
+import os
+import sys
+import threading
 
-spark = (SparkSession.builder.master('local[8]').appName('driver-sim')
-         .config('spark.sql.shuffle.partitions','8')
-         .config('spark.sql.session.timeZone','UTC')
-         .config('spark.ui.enabled','false').getOrCreate())
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import duckdb  # noqa: E402
+
+import __spark_entry__ as E  # noqa: E402
+from gpdb_spark.session import get_spark  # noqa: E402
+from tools.dtype_parity import compare  # noqa: E402
+
+spark = get_spark(app_name="driver-sim", shuffle_partitions=8)
 
 # 1. smoke: entry
 df = E.entry(spark)
 rows = df.collect()
 print('ENTRY rows=', len(rows), 'schema=', [f.name for f in df.schema.fields])
-assert len(rows) >= 0
 
 # 2. full correctness loop, driver-style
-import duckdb
 con = duckdb.connect()
 sf = os.environ.get('SPARK_GRAFT_SIM_SF', '/root/testdata/sf0.01')
 for t in ['region','nation','customer','supplier','part','orders','lineitem','events','documents','embeddings']:
@@ -32,142 +36,73 @@ qs, osql = E.queries(), E.oracle_sql()
 print('QUERIES:', len(qs), 'ORACLES:', len(osql))
 assert set(osql) <= set(qs), 'oracle without query!'
 
-def norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i].lower())
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            # Driver-canonicalizer parity (VERDICT r06 What's-wrong #2):
-            # the driver's pandas sort_values crashes on list/dict cells
-            # ("unhashable type: 'list'"), so the sim must refuse them
-            # too instead of silently repr-sorting past the class.
-            if isinstance(v, (list, dict)):
-                raise TypeError(
-                    f"unhashable type: {type(v).__name__!r} in compared "
-                    f"column {cols[i]!r} (driver canonicalizer parity — "
-                    "serialize nested outputs to text)")
-            if isinstance(v, float) and math.isnan(v): v = 'NaN'
-            # Driver parity (VERDICT r08 What's-wrong #1): the driver
-            # compares DuckDB's datetime64[us, UTC] against Spark's
-            # naive timestamps and reds the row; stripping tzinfo here
-            # made the sim LESS strict than the driver. Refuse instead.
-            if isinstance(v, datetime.datetime) and v.tzinfo is not None:
-                raise TypeError(
-                    f"tz-aware datetime in compared column {cols[i]!r} "
-                    "(driver schema/hash parity — serialize with "
-                    "(x AT TIME ZONE 'UTC')::text on both sides)")
-            vals.append(v)
-        out.append(tuple(vals))
-    return sorted(out, key=repr)
-
-fails = []
-# optional subset: names as argv (for targeted verify of changed queries)
-names = sorted(qs) if len(sys.argv) < 2 else [n for n in sys.argv[1:] if n in qs]
-
 # optional per-query watchdog (seconds): on oversized stress fixtures a
 # single quadratic DuckDB oracle (recursive-CTE transitive closure) can
 # hang the whole sweep — the round-5 scale-10 run sat on one query for
-# 50+ min. SIGALRM handles the Spark side (py4j recv raises on EINTR);
-# a blocking DuckDB C call never returns to the interpreter, so a
-# watchdog thread fires con.interrupt() for the oracle side (verified:
-# raises duckdb.InterruptException mid-recursive-CTE).
+# 50+ min. A timer thread cancels the query's Spark jobs and interrupts
+# DuckDB: a blocking DuckDB C call never returns to the interpreter, so
+# con.interrupt() is the way out (verified: raises
+# duckdb.InterruptException mid-recursive-CTE). Nothing is raised
+# asynchronously in the main thread, so a timeout cannot land inside an
+# exception handler and kill the sweep (the failure of the earlier
+# SIGALRM design).
 _tmo = int(os.environ.get('SPARK_GRAFT_SIM_TIMEOUT', '0'))
-if _tmo:
-    import signal
-    import threading
 
-    def _alarm(signum, frame):
-        raise TimeoutError(f'query exceeded {_tmo}s')
 
-    signal.signal(signal.SIGALRM, _alarm)
+class _Watchdog:
+    """Fires once, unless cancelled first; the lock makes fire/cancel
+    mutually exclusive (round-6 advice), so `fired` tells whether this
+    query's failure is its timeout."""
 
-    class _DuckWatchdog:
-        """con.interrupt() guarded by a per-query done flag (round-6
-        advice): a bare threading.Timer could fire in the window between
-        the oracle completing and t.cancel(), leaving DuckDB's interrupt
-        flag set so the NEXT query's execute raised InterruptException
-        and was misreported as a timeout. The lock makes fire/cancel
-        mutually exclusive; `fired` distinguishes a genuine timeout from
-        a stale interrupt (the residual execute-just-finished race),
-        which the caller retries once."""
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._done = False
+        self.fired = False
+        self._t = threading.Timer(_tmo, self._fire)
+        self._t.daemon = True
+        self._t.start()
 
-        def __init__(self):
-            self._lock = threading.Lock()
-            self._done = False
-            self.fired = False
-            self._t = threading.Timer(_tmo, self._fire)
-            self._t.daemon = True
-            self._t.start()
+    def _fire(self):
+        with self._lock:
+            if not self._done:
+                self.fired = True
+                # the query's pending action raises, and its tasks stop
+                # holding the local cores that later queries need
+                spark.sparkContext.cancelAllJobs()
+                con.interrupt()
 
-        def _fire(self):
-            with self._lock:
-                if not self._done:
-                    self.fired = True
-                    con.interrupt()
+    def cancel(self):
+        with self._lock:
+            self._done = True
+        self._t.cancel()
 
-        def cancel(self):
-            with self._lock:
-                self._done = True
-            self._t.cancel()
 
-    def _duck_watchdog():
-        return _DuckWatchdog()
+def judge(name):
+    """One query's verdict line, and whether the driver would fail it."""
+    sdf = qs[name](spark, sf)
+    if name not in osql:
+        return f'{name}: rows-only, {len(sdf.collect())} rows', False
+    v = compare(sdf, con, osql[name])
+    line = f'{name}: {v.problem or "MATCH"} spark={v.spark_rows} oracle={v.oracle_rows}'
+    return line, v.problem is not None
 
+
+fails = []
+names = sorted(qs) if len(sys.argv) < 2 else [n for n in sys.argv[1:] if n in qs]
 for name in names:
-    # two-phase watchdog (review findings: a single shared deadline let
-    # a deferred SIGALRM fire inside the interrupt handler and kill the
-    # sweep, and substring matching misrouted real errors as timeouts):
-    # SIGALRM is armed ONLY around the Spark phase (py4j recv raises on
-    # EINTR) and disabled before the oracle phase, where the duckdb
-    # interrupt timer is precise via its own exception type.
+    wd = _Watchdog() if _tmo else None
     try:
-        if _tmo:
-            signal.alarm(_tmo)
-        try:
-            sdf = qs[name](spark, sf)
-            srows = [tuple(r) for r in sdf.collect()]
-        finally:
-            if _tmo:
-                signal.alarm(0)
-        if name not in osql:
-            print(f'{name}: rows-only, {len(srows)} rows'); continue
-        for _attempt in (0, 1):
-            _wd = _duck_watchdog() if _tmo else None
-            try:
-                cur = con.execute(osql[name]); ocols = [d[0] for d in cur.description]; orows = cur.fetchall()
-                # strict dtype parity: the driver's hasher is type-sensitive (HUGEINT
-                # vs BIGINT fails it even with equal values) — be at least as strict
-                skew = dtype_mismatches(sdf.schema, con, osql[name])
-                break
-            except duckdb.InterruptException:
-                # genuine timeout (this query's watchdog fired) → report;
-                # otherwise a stale interrupt flag (prior watchdog fired
-                # post-completion despite the done-flag guard) → retry once
-                if (_wd is not None and _wd.fired) or _attempt == 1:
-                    raise
-            finally:
-                if _wd is not None:
-                    _wd.cancel()
-    except TimeoutError as exc:
-        # the JVM job keeps running after the Python-side raise; cancel
-        # it or it hogs the local cores for every later query
-        spark.sparkContext.cancelAllJobs()
-        print(f'{name}: TIMEOUT {exc}'); fails.append(name); continue
-    except duckdb.InterruptException:
-        print(f'{name}: TIMEOUT oracle interrupted after {_tmo}s')
-        fails.append(name); continue
-    try:
-        ok = (sorted(c.lower() for c in sdf.columns) == sorted(c.lower() for c in ocols)
-              and norm(srows, sdf.columns) == norm(orows, ocols)
-              and not skew)
-    except TypeError as exc:
-        # nested cell reached the canonicalizer — the driver would ERR here
-        print(f'{name}: CANON-ERR {exc}'); fails.append(name); continue
-    tag = 'MATCH' if ok else ('DTYPE-SKEW ' + '; '.join(skew) if skew else 'MISMATCH')
-    print(f'{name}: {tag} spark={len(srows)} oracle={len(orows)}')
-    if not ok: fails.append(name)
+        line, failed = judge(name)
+    except Exception:
+        if wd is None or not wd.fired:
+            raise
+        line, failed = f'{name}: TIMEOUT query exceeded {_tmo}s', True
+    finally:
+        if wd is not None:
+            wd.cancel()
+    print(line)
+    if failed:
+        fails.append(name)
 
 print('RESULT:', 'ALL MATCH' if not fails else f'FAILS: {fails}')
 sys.exit(1 if fails else 0)

@@ -16,13 +16,24 @@ VALUES, not widths), while HUGEINT is its own family (DuckDB's pandas
 conversion degrades int128 to float/object — the proven r04 failure),
 and int vs float vs decimal vs bool/str/ts/date/array all differ.
 
+It also holds the one row canonicaliser (``canon_rows``) and the one
+oracle verdict (``compare``) that both ``tests/test_oracle.py`` and
+``tools/driver_sim.py`` use — the atmsort/gpdiff idea from the
+reference's pg_regress harness (src/test/regress/atmsort.pl): results
+compare order-insensitively unless the query itself pins an ORDER BY.
+
 Usage:
     mism = dtype_mismatches(spark_df.schema, duckdb_con, oracle_sql)
     # -> list of "col: spark=<fam> duck=<fam>" strings, empty if clean
+    problem = compare(spark_df, duckdb_con, oracle_sql).problem
+    # -> None on a match, else the reason the driver would red the query
 """
 from __future__ import annotations
 
+import datetime
+import math
 import re
+from dataclasses import dataclass
 
 
 def canon_spark(simple: str) -> str:
@@ -139,3 +150,76 @@ def dtype_mismatches(spark_schema, duck_con, sql: str) -> list[str]:
                 f"serialize with (x AT TIME ZONE 'UTC')::text)"
             )
     return out
+
+
+def _canon_cell(v, col: str):
+    # Driver-canonicalizer parity (VERDICT r06 What's-wrong #2): the
+    # driver's pandas sort_values crashes on list/dict cells
+    # ("unhashable type: 'list'"), so refuse them instead of silently
+    # repr-sorting past the class.
+    if isinstance(v, (list, dict)):
+        raise TypeError(
+            f"unhashable type: {type(v).__name__!r} in compared column "
+            f"{col!r} (driver canonicalizer parity — serialize nested "
+            "outputs to text)")
+    # Driver parity (VERDICT r08 What's-wrong #1): the driver compares
+    # DuckDB's datetime64[us, UTC] against Spark's naive timestamps and
+    # reds the row, so a tz-aware value is refused, never stripped.
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        raise TypeError(
+            f"tz-aware datetime in compared column {col!r} (driver "
+            "schema/hash parity — serialize with "
+            "(x AT TIME ZONE 'UTC')::text on both sides)")
+    if isinstance(v, float):
+        if math.isnan(v):
+            return "NaN"
+        if v == 0.0:
+            return 0.0  # -0.0 would repr-sort apart from 0.0
+    return v
+
+
+def canon_rows(rows, cols) -> list[tuple]:
+    """Order-insensitive canonical image of a result: columns sorted by
+    lower-cased name, rows sorted by repr.  Raises TypeError on a cell
+    the driver's canonicalizer cannot compare."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i].lower())
+    return sorted(
+        (tuple(_canon_cell(r[i], cols[i]) for i in order) for r in rows),
+        key=repr,
+    )
+
+
+@dataclass(frozen=True)
+class Verdict:
+    spark_rows: int
+    oracle_rows: int
+    problem: str | None  # None when the driver would pass the query
+
+
+def compare(sdf, con, oracle_sql: str) -> Verdict:
+    """Run a Spark result and its DuckDB oracle, and judge them as the
+    driver does: column-name set, dtype families, row count, values."""
+    scols = sdf.schema.fieldNames()
+    srows = sdf.collect()
+    cur = con.execute(oracle_sql)
+    ocols = [d[0] for d in cur.description]
+    orows = cur.fetchall()
+
+    def verdict(problem=None):
+        return Verdict(len(srows), len(orows), problem)
+
+    if sorted(c.lower() for c in scols) != sorted(c.lower() for c in ocols):
+        return verdict(f"MISMATCH columns spark={scols} oracle={ocols}")
+    try:
+        a, b = canon_rows(srows, scols), canon_rows(orows, ocols)
+    except TypeError as exc:
+        return verdict(f"CANON-ERR {exc}")
+    skew = dtype_mismatches(sdf.schema, con, oracle_sql)
+    if skew:
+        return verdict("DTYPE-SKEW " + "; ".join(skew))
+    if len(a) != len(b):
+        return verdict("MISMATCH row count")
+    if a != b:
+        diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
+        return verdict(f"MISMATCH first diffs: {diffs}")
+    return verdict()

@@ -1,107 +1,77 @@
 #!/usr/bin/env python
-"""Per-query perf probe for the optimization rounds (guide §1).
+"""Per-query timing over bench.py's harness, with the noop sink (every
+column of every row is computed, nothing is collected to the driver).
 
-For each headline query: capture .explain("formatted") to
-plans/<round>/<name>_<tag>.txt (default r12), then time the computation N times against the
-noop sink (guide §1.4 — times every column of every row without sink
-cost; the bench itself keeps its historical collect() methodology).
-Prints a JSON line per query and a total.
+Warms the session as bench.py does, then prints one JSON line per query
+(best of --runs) and a final total line with the slowest queries. Query
+errors go to stderr and are counted in the total line. The fixture dir
+is $SPARK_GRAFT_SF_DIR, as for bench.py.
 
-Usage: python tools/perf_probe.py [--tag before|after] [--queries a,b,c]
-       [--runs 3] [--no-plans]
+Usage: python tools/perf_probe.py [--queries a,b,...|all] [--runs 3]
+       [--plans DIR]
+
+--queries defaults to bench.HEADLINE; `all` is the whole registry.
+--plans writes each query's .explain("formatted") to DIR/<name>.txt.
 """
 
 from __future__ import annotations
 
 import argparse
+import io
 import json
 import os
 import sys
-import time
 from contextlib import redirect_stdout
-import io
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE  # noqa: E402
+import bench  # noqa: E402
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--tag", default="before")
-    ap.add_argument("--queries", default=None)
+    ap.add_argument("--queries", default=",".join(bench.HEADLINE))
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--no-plans", action="store_true")
-    ap.add_argument("--sink", choices=["noop", "collect"], default="noop")
+    ap.add_argument("--plans", metavar="DIR")
     args = ap.parse_args()
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = args.queries.split(",") if args.queries else HEADLINE
-
+    from gpdb_spark.catalog import DEFAULT_SF_DIR as sf_dir
     from gpdb_spark.session import get_spark
-    from gpdb_spark.registry import QUERIES as _REG
-    import gpdb_spark.queries  # noqa: F401
-    from gpdb_spark.queries.datapipe_dedup import dedup_minhash_clusters_fast
 
-    QUERIES = dict(_REG)
-    QUERIES["dedup_minhash_clusters"] = dedup_minhash_clusters_fast
-
+    qs = bench.queries()
+    names = sorted(qs) if args.queries == "all" else args.queries.split(",")
     spark = get_spark(app_name="gpdb_spark_perf_probe")
     spark.sparkContext.setLogLevel("ERROR")
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
+    bench.warm(spark, names, sf_dir)
 
-    plan_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r12"))
-    os.makedirs(plan_dir, exist_ok=True)
-
-    # warm: JVM codegen + python worker pool (same as bench.py)
-    QUERIES["q01_pricing_summary"](spark, sf_dir).collect()
-
-    def _noop(batches):
-        import numpy  # noqa: F401
-        for b in batches:
-            yield b
-
-    n_cores = spark.sparkContext.defaultParallelism
-    spark.range(n_cores, numPartitions=n_cores).mapInPandas(_noop, "id long").collect()
-
-    warm_dir = os.environ.get("SPARK_GRAFT_WARM_SF_DIR", "/root/testdata/sf0.001")
+    times: dict[str, float] = {}
+    errors = 0
     for name in names:
-        fn = QUERIES.get(name)
-        if fn is not None:
-            try:
-                fn(spark, warm_dir).collect()
-            except Exception as exc:
-                print(f"warmup {name}: {exc}", file=sys.stderr)
-
-    times: dict[str, list[float]] = {}
-    for name in names:
-        fn = QUERIES.get(name)
-        if fn is None:
-            print(f"missing query {name}", file=sys.stderr)
+        try:
+            fn = qs[name]
+            if args.plans:
+                buf = io.StringIO()
+                with redirect_stdout(buf):
+                    fn(spark, sf_dir).explain("formatted")
+                with open(os.path.join(args.plans, f"{name}.txt"), "w") as fh:
+                    fh.write(buf.getvalue())
+            times[name] = round(
+                bench.best_of(spark, fn, sf_dir, args.runs, "noop"), 3
+            )
+        except Exception as exc:  # a sweep reports every query
+            errors += 1
+            print(f"ERROR {name}: {type(exc).__name__}: {exc}".splitlines()[0],
+                  file=sys.stderr, flush=True)
             continue
-        if not args.no_plans:
-            df = fn(spark, sf_dir)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            with open(os.path.join(plan_dir, f"{name}_{args.tag}.txt"), "w") as fh:
-                fh.write(buf.getvalue())
-        runs = []
-        for i in range(args.runs):
-            spark.sparkContext.setJobDescription(f"{name} run {i}")
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            if args.sink == "noop":
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df.collect()
-            runs.append(round(time.perf_counter() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
-        times[name] = runs
-        print(json.dumps({"query": name, "runs": runs, "best": min(runs)}), flush=True)
+        print(json.dumps({"query": name, "best": times[name]}), flush=True)
 
-    total = round(sum(min(v) for v in times.values()), 3)
-    print(json.dumps({"metric": "perf_probe_total_best", "value": total,
-                      "tag": args.tag, "sf_dir": sf_dir}))
+    slowest = sorted(times.items(), key=lambda kv: -kv[1])[:10]
+    print(json.dumps({"metric": "perf_probe_total_best",
+                      "value": round(sum(times.values()), 3),
+                      "n": len(times), "errors": errors,
+                      "slowest": slowest, "sf_dir": sf_dir}))
 
 
 if __name__ == "__main__":

@@ -64,11 +64,12 @@ Usage: python tools/pg_golden_probe.py [--list-diff] [file ...]
 from __future__ import annotations
 
 import datetime
+import os
 import re
 import sys
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 EXPECTED = "/root/reference/src/test/regress/expected"
 
@@ -628,20 +629,17 @@ def main(argv):
     list_diff = "--list-diff" in argv
     files = [a for a in argv if not a.startswith("--")] or CANDIDATES
 
-    from pyspark.sql import SparkSession
-
     import gpdb_spark  # noqa: F401 — ym shim
     from gpdb_spark.dialect import pg_sql
+    from gpdb_spark.session import get_spark
 
     # the regress suite runs under TimeZone=PST8PDT (pg_regress.c) —
     # zoneless timestamptz input must interpret in THAT session zone,
     # exactly as PG does, or every tstz value is off by the offset
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.session.timeZone", "PST8PDT")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="pg-golden-probe",
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.session.timeZone": "PST8PDT"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     tally = {k: 0 for k in ("GOLD_AGREE", "GOLD_DIFF", "ERR_AGREE",

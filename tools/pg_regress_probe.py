@@ -55,6 +55,7 @@ Engine-side known divergences (documented, lenient-by-Spark):
 from __future__ import annotations
 
 import glob
+import os
 import re
 import sys
 
@@ -128,7 +129,7 @@ def main() -> None:
     list_both = "--list-both" in sys.argv
 
     import duckdb
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from gpdb_spark.session import get_spark
     from gpdb_spark.dialect import pg_sql
 

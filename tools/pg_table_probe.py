@@ -56,11 +56,12 @@ path circle enum aggregates case int2 int4 varchar char text).
 """
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pg_golden_probe import (  # noqa: E402
     _DEFAULT_CTX,
@@ -677,23 +678,19 @@ def main(argv):
     list_diff = "--list-diff" in argv
     files = [a for a in argv if not a.startswith("--")] or DEFAULT_FILES
 
-    import os
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
-
     import gpdb_spark  # noqa: F401
     from gpdb_spark.engine import Engine
+    from gpdb_spark.session import get_spark
 
     workdir = tempfile.mkdtemp(prefix="pg_table_probe_")
     os.chdir(workdir)
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.session.timeZone", "PST8PDT")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="pg-table-probe",
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.session.timeZone": "PST8PDT"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     tally = {k: 0 for k in ("GOLD_AGREE", "GOLD_DIFF", "ERR_AGREE",

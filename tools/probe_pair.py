@@ -4,11 +4,12 @@ line, or argv[1] a file). Used to classify pg_regress_probe DISAGREEs
 into real dialect bugs vs DuckDB-as-oracle artifacts."""
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from gpdb_spark.session import get_spark  # noqa: E402
 from gpdb_spark.dialect import pg_sql  # noqa: E402
 
